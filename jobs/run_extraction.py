@@ -8,8 +8,11 @@ Usage:
       (no --input: synthesize the deterministic corpus shard-locally)
 
 The job is idempotent: rerunning with the same output resumes via the
-sink's (conv_id, turn_idx) lineage anti-join. Per-partition metrics land
-in <output>/metrics; a one-line JSON summary goes to stdout.
+sink's (conv_id, turn_idx) lineage anti-join. It writes the one sink that
+batch and streaming runs share: <output>/extracted, partitioned by day
+(ds=yyyy-MM-dd) with a run_id on every row, and a metrics table of
+per-partition rows keyed by run_id in <output>/metrics. A one-line JSON
+summary goes to stdout.
 """
 
 from __future__ import annotations
@@ -32,7 +35,6 @@ def main() -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--master", default=None)
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--no-day-partitioning", action="store_true")
     args = ap.parse_args()
 
     from mineru_spark.pipeline import (get_spark, run_job,
@@ -46,8 +48,7 @@ def main() -> None:
         src = synthesize_transcripts(spark, args.n_convs)
 
     t0 = time.perf_counter()
-    summary = run_job(spark, src, args.output, resume=not args.no_resume,
-                      partition_by_day=not args.no_day_partitioning)
+    summary = run_job(spark, src, args.output, resume=not args.no_resume)
     dt = time.perf_counter() - t0
     summary["wall_sec"] = round(dt, 2)
     summary["turns_per_sec"] = round(summary["turns"] / dt, 1) if dt else None

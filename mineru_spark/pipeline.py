@@ -23,14 +23,18 @@ peak memory exactly like the reference's 64-page processing window
 Resume/checkpoint: `run_job` is idempotent — already-extracted
 (conv_id, turn_idx) pairs are anti-joined away against the sink's lineage
 before any work happens (the reference's per-doc on_doc_ready incremental
-completion, cli/common.py:402-422, as a set difference).
+completion, cli/common.py:402-422, as a set difference).  Batch runs and
+streaming micro-batches both commit through `commit_extracted`, so one
+day-partitioned sink with run_ids and a metrics table holds them all.
 """
 
 from __future__ import annotations
 
 import os
 
+import numpy as np
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .datagen.transcripts import conv_length, gen_turn
@@ -76,6 +80,13 @@ EXTRACT_SCHEMA = T.StructType([
     T.StructField("para_merged", T.IntegerType(), True),
     T.StructField("tables_merged", T.IntegerType(), True),
     T.StructField("spans_need_ocr", T.IntegerType(), True),
+])
+
+# the sink's rows: EXTRACT_SCHEMA plus the columns commit_extracted adds
+SINK_SCHEMA = T.StructType(EXTRACT_SCHEMA.fields + [
+    T.StructField("part_id", T.IntegerType(), False),
+    T.StructField("run_id", T.StringType(), False),
+    T.StructField("ds", T.StringType(), True),
 ])
 
 _METRIC_COLS = ["blocks_classified", "blocks_discarded", "boilerplate_dropped",
@@ -133,6 +144,14 @@ def get_spark(app: str = "mineru_spark", master: str | None = None,
         # 12g heap; JVM-side stages converged only after ~6 full-corpus
         # reps).  Production/VM-tuned deployments override via
         # SPARK_GRAFT_DRIVER_MEM.
+        # Per-task budget in local mode: every task slot shares this one
+        # heap's unified (execution + storage) pool of
+        #   (heap - 300 MB reserved) * spark.memory.fraction (0.6),
+        # i.e. (12288 - 300) * 0.6 ≈ 7.0 GB at 12g.  With N tasks running
+        # each may hold at most pool/N and is promised pool/(2N) before it
+        # must spill: ≈ 225 MB (≥ 112 MB) per slot at local[32].  Hosts
+        # with much more RAM should raise SPARK_GRAFT_DRIVER_MEM for
+        # larger corpora rather than pay the spills.
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"))
         .config("spark.driver.extraJavaOptions",
@@ -315,36 +334,29 @@ def classify_routes(df: DataFrame) -> DataFrame:
 # Extraction (mapInPandas; per-turn kernels)
 # ---------------------------------------------------------------------------
 
+def _turns_to_frame(pdf: pd.DataFrame, outs: list[dict]) -> pd.DataFrame:
+    """EXTRACT_SCHEMA rows from ``outs``, the ``extract_turn`` results of
+    ``pdf``'s rows in row order (the one result→row builder)."""
+    return pd.DataFrame({
+        "conv_id": pdf["conv_id"].to_numpy(),
+        "turn_idx": pdf["turn_idx"].to_numpy(dtype="int32"),
+        "ts": pdf["ts"].to_numpy(),
+        **{k: [o[k] for o in outs] for k in (
+            "route", "md", "md_nlp", "content_list", "content_list_v2",
+            "middle")},
+        "spans": [[{"page_idx": s["page_idx"],
+                    "bbox": [float(v) for v in s["bbox"]],
+                    "type": s["type"], "content": s["content"]}
+                   for s in o["spans"]] for o in outs],
+        **{k: np.array([o["metrics"][k] for o in outs], dtype="int32")
+           for k in _METRIC_COLS},
+    })
+
+
 def _extract_batch(batches):
     for pdf in batches:
-        out = {k: [] for k in ("conv_id", "turn_idx", "ts", "route", "md",
-                               "md_nlp", "content_list", "content_list_v2",
-                               "middle", "spans", *_METRIC_COLS)}
-        for conv_id, turn_idx, ts, text, tool in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["ts"],
-                pdf["text"], pdf["tool"]):
-            r = extract_turn(text, tool)
-            out["conv_id"].append(conv_id)
-            out["turn_idx"].append(turn_idx)
-            out["ts"].append(ts)
-            out["route"].append(r["route"])
-            out["md"].append(r["md"])
-            out["md_nlp"].append(r["md_nlp"])
-            out["content_list"].append(r["content_list"])
-            out["content_list_v2"].append(r["content_list_v2"])
-            out["middle"].append(r["middle"])
-            out["spans"].append([
-                {"page_idx": s["page_idx"],
-                 "bbox": [float(v) for v in s["bbox"]],
-                 "type": s["type"], "content": s["content"]}
-                for s in r["spans"]])
-            for k in _METRIC_COLS:
-                out[k].append(int(r["metrics"][k]))
-        res = pd.DataFrame(out)
-        res["turn_idx"] = res["turn_idx"].astype("int32")
-        for k in _METRIC_COLS:
-            res[k] = res[k].astype("int32")
-        yield res
+        yield _turns_to_frame(pdf, [extract_turn(text, tool) for text, tool
+                                    in zip(pdf["text"], pdf["tool"])])
 
 
 def _tune_session_for_payloads(spark: SparkSession) -> None:
@@ -433,24 +445,7 @@ def _extract_finalize_conv(pdf: pd.DataFrame) -> pd.DataFrame:
         r["turn_idx"] = int(ti)
         outs.append(r)
     finalize_conv(outs)
-    res = pd.DataFrame({
-        "conv_id": pdf["conv_id"],
-        "turn_idx": pdf["turn_idx"].astype("int32"),
-        "ts": pdf["ts"],
-        "route": [o["route"] for o in outs],
-        "md": [o["md"] for o in outs],
-        "md_nlp": [o["md_nlp"] for o in outs],
-        "content_list": [o["content_list"] for o in outs],
-        "content_list_v2": [o["content_list_v2"] for o in outs],
-        "middle": [o["middle"] for o in outs],
-        "spans": [[{"page_idx": s["page_idx"],
-                    "bbox": [float(v) for v in s["bbox"]],
-                    "type": s["type"], "content": s["content"]}
-                   for s in o["spans"]] for o in outs],
-        **{k: pd.Series([int(o["metrics"][k]) for o in outs],
-                        dtype="int32") for k in _METRIC_COLS},
-    })
-    return res
+    return _turns_to_frame(pdf, outs)
 
 
 def extract_finalized(df: DataFrame,
@@ -490,7 +485,6 @@ def extract_finalized(df: DataFrame,
     src_rest = df.join(
         F.broadcast(keys.select("conv_id", "turn_idx")),
         ["conv_id", "turn_idx"], "left_anti")
-    _tune_session_for_payloads(df.sparkSession)
     rest = extract(src_rest, salt_partitions=salt_partitions)
     # EXPLICIT repartition on the group keys: the run rows are small in
     # BYTES but heavy in Python time (extraction kernel per row), so AQE's
@@ -509,10 +503,22 @@ def extract_finalized(df: DataFrame,
 # Sink + resume + metrics (SURVEY §7 step 7)
 # ---------------------------------------------------------------------------
 
-def run_job(spark: SparkSession, transcripts: DataFrame, out_dir: str,
-            resume: bool = True, salt_partitions: int | None = None,
-            partition_by_day: bool = True) -> dict:
-    """Idempotent extraction job with lineage-based resume.
+def _read_sink(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    """Every committed row of ``out_dir``'s sink, or None before its first
+    commit.  The explicit schema skips schema inference and keeps ``ds`` a
+    string; a sink directory holding no data file reads as empty."""
+    try:
+        return spark.read.schema(SINK_SCHEMA) \
+            .parquet(os.path.join(out_dir, "extracted"))
+    except AnalysisException:
+        return None
+
+
+def commit_extracted(spark: SparkSession, result: DataFrame,
+                     out_dir: str) -> dict:
+    """Append one run's extraction output to the sink — the only writer of
+    ``out_dir/extracted``, shared by the batch job and the streaming
+    micro-batches, so the sink has one layout whoever wrote it.
 
     Sink layout (parquet stand-in for the Iceberg table — Iceberg jars are
     not on the sandbox classpath; the layout keeps Iceberg-style
@@ -522,46 +528,28 @@ def run_job(spark: SparkSession, transcripts: DataFrame, out_dir: str,
                            hive-partitioned by ds=days(ts) (the Iceberg
                            `days(ts)` transform; FIXTURES.md §1) so time
                            predicates prune partitions at read; every row
-                           carries this run's run_id (the Iceberg
+                           carries its run's run_id (the Iceberg
                            snapshot-id analog)
       out_dir/metrics/     appended per run: one row per task partition,
                            keyed by run_id
 
-    Cost discipline (the 10^12-turn budget): exactly ONE extraction pass
-    over the new data (the write), plus one narrow semi-join count for the
-    resume report, plus a run_id-filtered read-back for metrics — parquet
-    row-group stats (run_id is constant per file) skip all previous runs'
-    files, so the metric scan touches only this run's output.
-    """
+    run_id is a fresh uuid, not a streaming epoch id: epoch ids restart at
+    0 under a new checkpoint, so two queries sharing one sink would share
+    run_ids.  Cost: the write (the one extraction pass) plus a
+    run_id-filtered read-back for the metrics — parquet row-group stats
+    (run_id is constant per file) skip every earlier run's files, so the
+    metric scan touches only this run's output."""
     import uuid
 
-    extracted_path = os.path.join(out_dir, "extracted")
-    metrics_path = os.path.join(out_dir, "metrics")
     run_id = uuid.uuid4().hex
+    (result.withColumn("part_id", F.spark_partition_id())
+     .withColumn("run_id", F.lit(run_id))
+     .withColumn("ds", F.date_format(F.col("ts").cast("timestamp"),
+                                     "yyyy-MM-dd"))
+     .write.mode("append").partitionBy("ds")
+     .parquet(os.path.join(out_dir, "extracted")))
 
-    todo = transcripts
-    already = 0
-    if resume and _path_has_data(spark, extracted_path):
-        lineage = spark.read.parquet(extracted_path) \
-            .select("conv_id", "turn_idx")
-        # one narrow count (keys only) instead of before/after full counts
-        already = transcripts.select("conv_id", "turn_idx") \
-            .join(lineage, ["conv_id", "turn_idx"], "left_semi").count()
-        todo = todo.join(lineage, ["conv_id", "turn_idx"], "left_anti")
-
-    result = extract_finalized(todo, salt_partitions=salt_partitions)
-    result = result.withColumn("part_id", F.spark_partition_id()) \
-                   .withColumn("run_id", F.lit(run_id))
-    writer = result.write.mode("append")
-    if partition_by_day:
-        result = result.withColumn(
-            "ds", F.date_format(F.col("ts").cast("timestamp"), "yyyy-MM-dd"))
-        writer = result.write.mode("append").partitionBy("ds")
-    writer.parquet(extracted_path)
-
-    # metrics over THIS run only: run_id is constant per written file, so
-    # min/max row-group stats prune every older file from the scan
-    out = spark.read.parquet(extracted_path).filter(F.col("run_id") == run_id)
+    out = _read_sink(spark, out_dir).filter(F.col("run_id") == run_id)
     per_part = (out.groupBy("part_id")
                 .agg(F.count("*").alias("turns"),
                      F.sum("blocks_classified").alias("blocks_classified"),
@@ -570,7 +558,7 @@ def run_job(spark: SparkSession, transcripts: DataFrame, out_dir: str,
                 .withColumn("run_id", F.lit(run_id))).collect()
     if per_part:
         spark.createDataFrame(per_part).write.mode("append") \
-            .parquet(metrics_path)
+            .parquet(os.path.join(out_dir, "metrics"))
 
     # all actions done — drop the tags THIS job owns (r4 ADVICE: the
     # no-arg form would also evict unrelated live caches, e.g. a
@@ -582,7 +570,24 @@ def run_job(spark: SparkSession, transcripts: DataFrame, out_dir: str,
     return {"turns": sum(r["turns"] for r in per_part),
             "blocks": sum(r["blocks_classified"] for r in per_part),
             "ocr_fallback": sum(r["ocr_fallback"] for r in per_part),
-            "skipped_resume": already, "run_id": run_id}
+            "run_id": run_id}
+
+
+def run_job(spark: SparkSession, transcripts: DataFrame, out_dir: str,
+            resume: bool = True) -> dict:
+    """Idempotent extraction job with lineage-based resume: turns already
+    in the sink are anti-joined away, the rest are extracted and committed
+    (``commit_extracted``).  Resume costs one narrow semi-join count (keys
+    only) for the report."""
+    todo, already = transcripts, 0
+    sink = _read_sink(spark, out_dir) if resume else None
+    if sink is not None:
+        lineage = sink.select("conv_id", "turn_idx")
+        already = transcripts.select("conv_id", "turn_idx") \
+            .join(lineage, ["conv_id", "turn_idx"], "left_semi").count()
+        todo = todo.join(lineage, ["conv_id", "turn_idx"], "left_anti")
+    return {**commit_extracted(spark, extract_finalized(todo), out_dir),
+            "skipped_resume": already}
 
 
 def list_runs(spark: SparkSession, out_dir: str) -> list[dict]:
@@ -603,14 +608,6 @@ def read_run(spark: SparkSession, out_dir: str, run_id: str) -> DataFrame:
     stats prune every other run's files from the scan."""
     return (spark.read.parquet(os.path.join(out_dir, "extracted"))
             .filter(F.col("run_id") == run_id))
-
-
-def _path_has_data(spark: SparkSession, path: str) -> bool:
-    try:
-        spark.read.parquet(path).limit(1).collect()
-        return True
-    except Exception:
-        return False
 
 
 def write_bucketed_sink(spark: SparkSession, extracted: DataFrame,

@@ -20,10 +20,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .. import cache
 from ..kernels.classify import OFFICE_SNIFF_RE
-from ..pipeline import (TRANSCRIPT_SCHEMA, extract_finalized,
-                        _path_has_data)
+from ..pipeline import (TRANSCRIPT_SCHEMA, commit_extracted,
+                        extract_finalized, _read_sink)
 
 
 def read_transcript_stream(spark: SparkSession, in_dir: str,
@@ -141,6 +140,24 @@ def _split_open_runs(df: DataFrame,
     return closed, held
 
 
+def _drop_committed(spark: SparkSession, df: DataFrame, out_dir: str
+                    ) -> tuple[DataFrame, DataFrame | None]:
+    """(rows of ``df`` not yet in the sink, committed rows as
+    (conv_id, turn_idx, _office)) — the second is None before the first
+    commit.  The lineage anti-join makes a replayed micro-batch write
+    nothing twice, and it leaves ``df`` disjoint from the committed rows,
+    as ``_split_open_runs`` requires."""
+    sink = _read_sink(spark, out_dir)
+    if sink is None:
+        return df, None
+    todo = df.join(sink.select("conv_id", "turn_idx"),
+                   ["conv_id", "turn_idx"], "left_anti")
+    # route == 'office' ⟺ the raw sniff (parity-tested)
+    return todo, sink.select(
+        "conv_id", "turn_idx",
+        (F.col("route") == "office").cast("int").alias("_office"))
+
+
 def _run_state_path(out_dir: str, epoch: int | None = None) -> str:
     base = os.path.join(out_dir, "run_state")
     return base if epoch is None else os.path.join(base, f"epoch={epoch}")
@@ -161,10 +178,8 @@ def _read_run_state(spark: SparkSession, out_dir: str,
         epochs = [e for e in epochs if e < before_epoch]
     if not epochs:
         return None
-    path = _run_state_path(out_dir, max(epochs))
-    if not _path_has_data(spark, path):
-        return None
-    return spark.read.schema(TRANSCRIPT_SCHEMA).parquet(path)
+    return spark.read.schema(TRANSCRIPT_SCHEMA) \
+        .parquet(_run_state_path(out_dir, max(epochs)))
 
 
 def streaming_extract(spark: SparkSession, in_dir: str, out_dir: str,
@@ -196,40 +211,21 @@ def streaming_extract(spark: SparkSession, in_dir: str, out_dir: str,
     successor still merges — the successor was held while the
     intermediate index was unreceived.  The only divergence window left
     is a run force-flushed at MAX_OPEN_RUN (bounded state)."""
-    extracted_path = os.path.join(out_dir, "extracted")
-
     src = (read_transcript_stream(spark, in_dir, max_files_per_trigger)
            .withWatermark("ts", watermark)
            .dropDuplicates(["conv_id", "turn_idx"]))
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         todo = batch_df
-        received = None
-        if _path_has_data(spark, extracted_path):
-            lineage = spark.read.parquet(extracted_path) \
-                .select("conv_id", "turn_idx", "route")
-            todo = todo.join(lineage.select("conv_id", "turn_idx"),
-                             ["conv_id", "turn_idx"], "left_anti")
-            # committed rows feed the run-closure flank knowledge
-            # (route == 'office' ⟺ the raw sniff, parity-tested)
-            received = lineage.select(
-                "conv_id", "turn_idx",
-                (F.col("route") == "office").cast("int").alias("_office"))
         state = _read_run_state(spark, out_dir, before_epoch=int(epoch_id))
         if state is not None:
             todo = todo.unionByName(state) \
                 .dropDuplicates(["conv_id", "turn_idx"])
+        todo, received = _drop_committed(spark, todo, out_dir)
         closed, tails = _split_open_runs(todo, received)
-        result = extract_finalized(closed) \
-            .withColumn("part_id", F.spark_partition_id())
-        result.write.mode("append").parquet(extracted_path)
+        commit_extracted(spark, extract_finalized(closed), out_dir)
         tails.write.mode("overwrite") \
             .parquet(_run_state_path(out_dir, int(epoch_id)))
-        # batch actions complete: release the run-key cache so per-epoch
-        # invocations of extract_finalized never accumulate cached frames
-        # (tag-scoped: a concurrent query's caches in the same session
-        # must survive the epoch — r4 ADVICE)
-        cache.release("extract_keys")
         # prune state epochs older than the replay window (previous epoch)
         import shutil
         base = _run_state_path(out_dir)
@@ -247,22 +243,13 @@ def streaming_extract(spark: SparkSession, in_dir: str, out_dir: str,
 
 def flush_open_runs(spark: SparkSession, out_dir: str) -> int:
     """Commit all still-open tail runs (stream drained / conversation
-    closure): extract+finalize the held raw rows, append to the sink,
+    closure): extract+finalize the held raw rows, commit them as one run,
     clear the state.  Returns the number of rows flushed."""
-    extracted_path = os.path.join(out_dir, "extracted")
     state = _read_run_state(spark, out_dir)
     if state is None:
         return 0
-    todo = state
-    if _path_has_data(spark, extracted_path):
-        lineage = spark.read.parquet(extracted_path) \
-            .select("conv_id", "turn_idx")
-        todo = todo.join(lineage, ["conv_id", "turn_idx"], "left_anti")
-    n = todo.count()
-    if n:
-        (extract_finalized(todo)
-         .withColumn("part_id", F.spark_partition_id())
-         .write.mode("append").parquet(extracted_path))
+    todo, _ = _drop_committed(spark, state, out_dir)
+    n = commit_extracted(spark, extract_finalized(todo), out_dir)["turns"]
     import shutil
     shutil.rmtree(_run_state_path(out_dir), ignore_errors=True)
     return n

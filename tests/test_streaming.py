@@ -232,6 +232,63 @@ def test_streaming_out_of_order_continuation_matches_batch(spark, tmp_path):
     assert zz[1]["md"] == "" and zz[2]["md"] == ""
 
 
+def test_batch_and_streaming_share_one_sink(spark, tmp_path):
+    """Batch runs and streaming micro-batches commit through one writer
+    into one day-partitioned sink: a batch run over half the
+    conversations, then two streaming queries (separate checkpoints) over
+    the other half, then a batch run over everything must find every turn
+    already committed — no turn extracted twice, every data file under a
+    ds= directory, every run in list_runs.  The two queries' epoch ids
+    both start at 0, so their run_ids must not derive from them."""
+    from mineru_spark.pipeline import (list_runs, run_job,
+                                       synthesize_transcripts)
+    from mineru_spark.streaming.ingest import (flush_open_runs,
+                                               streaming_extract)
+
+    src = synthesize_transcripts(spark, 12)
+    n = src.count()
+    out = str(tmp_path / "sink")
+    streamed = {
+        "q1": F.col("conv_id").between("conv-00000006", "conv-00000008"),
+        "q2": F.col("conv_id") >= "conv-00000009"}
+    r1 = run_job(spark, src.filter(F.col("conv_id") < "conv-00000006"), out)
+
+    for name, cond in streamed.items():
+        in_dir = str(tmp_path / f"in_{name}")
+        # two files, so conversations straddle micro-batches
+        src.filter(cond & (F.col("turn_idx") <= 1)).coalesce(1) \
+            .write.parquet(in_dir)
+        src.filter(cond & (F.col("turn_idx") >= 2)).coalesce(1) \
+            .write.mode("append").parquet(in_dir)
+        q = streaming_extract(spark, in_dir, out, str(tmp_path / f"ck_{name}"),
+                              max_files_per_trigger=1)
+        _await(q)
+        flush_open_runs(spark, out)
+
+    r3 = run_job(spark, src, out)
+    assert r3["turns"] == 0 and r3["skipped_resume"] == n
+
+    root = os.path.join(out, "extracted")
+    got = spark.read.parquet(root)
+    assert got.count() == n
+    assert got.select("conv_id", "turn_idx").distinct().count() == n
+
+    data = [os.path.relpath(os.path.join(d, f), root)
+            for d, _, files in os.walk(root) for f in files
+            if f.endswith(".parquet")]
+    assert data and all(p.split(os.sep)[0].startswith("ds=") for p in data)
+
+    runs = {r["run_id"]: r["turns"] for r in list_runs(spark, out)}
+    assert runs[r1["run_id"]] == r1["turns"]
+    assert len(runs) >= 2 and sum(runs.values()) == n
+
+    run_ids = {name: {r["run_id"] for r in
+                      got.filter(cond).select("run_id").distinct().collect()}
+               for name, cond in streamed.items()}
+    assert run_ids["q1"] and run_ids["q2"]
+    assert not run_ids["q1"] & run_ids["q2"]
+
+
 def test_streaming_dedup_same_batch_duplicate_burst(spark, tmp_path):
     """r6 state re-key (state keyed BY content hash, one constant-size
     row per distinct hash): a burst of many copies of one text inside a
