@@ -11,8 +11,9 @@ Architecture (SURVEY.md §7):
 - ``kernels``    — pure Python/numpy/pandas extraction kernels; the single
                    source of truth used both by the Spark UDFs and by the
                    pytest oracle (per-turn text equality).
-- ``pipeline``   — the Spark job: classify pUDF → salted repartition →
-                   ``mapInPandas`` extraction → sink with lineage + metrics.
+- ``pipeline``   — the Spark job: office-run key split → ``mapInPandas``
+                   extraction + fused office-run finalize → sink with
+                   lineage + metrics.
 - ``queries``    — relational query pack (joins/aggs/windows/sorts) with
                    DuckDB-checkable SQL oracles.
 - ``textops``    — corpus-scale text ops: dedup (exact/minhash/simhash),

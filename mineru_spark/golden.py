@@ -7,7 +7,7 @@ byte, tests/test_golden_equality.py) is run over the deterministic corpus
 and written to a parquet file; `oracle_sql()` then reads it with DuckDB's
 `read_parquet`.  What the driver gate verifies, therefore, is exactly the
 north rule's risk at scale: that the DISTRIBUTED path — Arrow batching,
-salted partitioning, conv-grouped finalize, ordering — reproduces the
+conv-grouped finalize, ordering — reproduces the
 single-process result for every route (pdf_txt / pdf_ocr / html / pptx /
 docx / office / plain / empty / error).
 

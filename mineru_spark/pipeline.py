@@ -5,12 +5,12 @@ Spark-first shape (mirrors the reference lifecycle at
 declaratively; the shipped path is `extract_finalized`):
 
     scan (or shard-local synthesis)                 [S1]
-      → office-run key sniff  JVM-only prefix filter + keys-only
-                              gaps-and-islands windows          [tiny]
+      → office-run key sniff  JVM-only prefix filter + one keys-only
+                              lag/lead window                   [tiny]
       → split on broadcast (conv_id, turn_idx) run keys
       ├─ rest (~92-95%)       mapInPandas over Arrow batches    [0 shuffles]
       │                       (per-turn kernels; chars never become rows)
-      └─ office runs          repartition(run keys) → ONE fused Python
+      └─ office runs          repartition(conv_id) → ONE fused Python
                               stage: extract + cross-turn finalize [D2]
       → union → sink          parquet/Iceberg append + lineage + metrics
 
@@ -38,7 +38,6 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .datagen.transcripts import conv_length, gen_turn
-from . import cache
 from .kernels.classify import OFFICE_SNIFF_RE, classify_series
 from .kernels.oracle import extract_turn
 
@@ -106,21 +105,7 @@ def get_spark(app: str = "mineru_spark", master: str | None = None,
         .config("spark.sql.shuffle.partitions", str(sp))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # payloads are 10-100 KB strings: small Arrow batches bound worker
-        # memory AND pipeline JVM→Python transfer (measured: batch 32 ≈ 2×
-        # the turns/sec of batch 512 at local[32]); this is the reference's
-        # 64-page processing window (pipeline_analyze.py:207) as a batch
-        # size.  Relational queries don't go through Python, so the small
-        # batch costs them nothing.
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
-        # the vectorized parquet reader defaults to 4096-row column batches;
-        # with ~100 KB payload strings that is ~400 MB of buffer per task —
-        # measured 3-10× scan slowdown from allocation/GC churn. 128 rows
-        # keeps batches ~10 MB. Same knob matters on a real cluster for any
-        # document-payload table.
-        .config("spark.sql.parquet.columnarReaderBatchSize", "128")
         # scan-parallelism floor at 4x cores (guide §6): CPU-heavy scans
         # (the extraction map) are straggler-bound with one task wave;
         # finer splits bound the tail.  Scale-relative, not a local
@@ -158,6 +143,7 @@ def get_spark(app: str = "mineru_spark", master: str | None = None,
                 "-XX:MaxDirectMemorySize=16g")
         .getOrCreate()
     )
+    _tune_session_for_payloads(spark)
     _warm_session(spark)
     return spark
 
@@ -361,30 +347,38 @@ def _extract_batch(batches):
 
 def _tune_session_for_payloads(spark: SparkSession) -> None:
     """Runtime-settable knobs that MUST hold when the extraction map runs,
-    even inside a session we didn't build (the round driver's): small
-    Arrow batches bound worker memory for 10-100 KB payload rows (default
-    10000-row batches are ~1 GB), and UTC keeps ts columns stable."""
+    even inside a session get_spark didn't build; get_spark sets them here
+    too, so they live in one place.  UTC keeps ts columns stable."""
+    # payloads are 10-100 KB strings: small Arrow batches bound worker
+    # memory (default 10000-row batches are ~1 GB) AND pipeline JVM→Python
+    # transfer (measured: batch 32 ≈ 2× the turns/sec of batch 512 at
+    # local[32]); this is the reference's 64-page processing window
+    # (pipeline_analyze.py:207) as a batch size.  Relational queries don't
+    # go through Python, so the small batch costs them nothing.
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # the vectorized parquet reader defaults to 4096-row column batches;
+    # with ~100 KB payload strings that is ~400 MB of buffer per task —
+    # measured 3-10× scan slowdown from allocation/GC churn. 128 rows
+    # keeps batches ~10 MB. Same knob matters on a real cluster for any
+    # document-payload table.
     try:
         spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
     except Exception:
         pass  # static in some sessions; best-effort
 
 
-def extract(df: DataFrame, salt_partitions: int | None = None) -> DataFrame:
-    """Salted repartition + mapInPandas extraction.
+def extract(df: DataFrame) -> DataFrame:
+    """Per-turn mapInPandas extraction over the input's own partitioning.
 
-    The unit of work is one TURN, so hash-repartitioning on
-    (conv_id, turn_idx) spreads the turns of one long conversation across
-    all tasks — the Zipf conv-length tail cannot create a straggler
-    partition.  This is the reference's cross-document batch packing
-    (pipeline_analyze.py:232-262) expressed as a partitioner."""
+    The unit of work is one TURN, so the Zipf conv-length tail cannot
+    create a straggler partition: a long conversation is just more
+    independent map rows, with no shuffle in front of them.  This is the
+    reference's cross-document batch packing (pipeline_analyze.py:232-262)
+    expressed as a plain map."""
     _tune_session_for_payloads(df.sparkSession)
-    narrow = df.select("conv_id", "turn_idx", "ts", "text", "tool")
-    if salt_partitions:
-        narrow = narrow.repartition(salt_partitions, "conv_id", "turn_idx")
-    return narrow.mapInPandas(_extract_batch, schema=EXTRACT_SCHEMA)
+    return df.select("conv_id", "turn_idx", "ts", "text", "tool") \
+        .mapInPandas(_extract_batch, schema=EXTRACT_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -392,16 +386,16 @@ def extract(df: DataFrame, salt_partitions: int | None = None) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _candidate_run_keys(df: DataFrame) -> DataFrame:
-    """(conv_id, turn_idx, _run) keys of every turn inside a maximal run
-    of ≥2 ADJACENT office turns, detected from the RAW transcripts —
-    extraction output is never touched.
+    """(conv_id, turn_idx) of every office turn whose previous or next
+    office turn is index-adjacent, i.e. every turn inside a run of ≥2
+    ADJACENT office turns, detected from the RAW transcripts — extraction
+    output is never touched.
 
     The cross-turn table merge only ever acts within such runs
     (finalize_conv resets its anchor on any non-office or non-adjacent
-    turn), so the RUN — not the conversation — is the finalize unit:
-    grouping at run granularity shuffles only the office-run rows (~5-8%
-    of the corpus) instead of every turn of a candidate conversation
-    (~20%).
+    turn), so only these rows need the grouped finalize: they are ~5-8%
+    of the corpus, against ~20% for every turn of a candidate
+    conversation.
 
     The office route is exactly "prefix-lstrip starts with <table"
     (kernels/classify.py cascade: the JSON kinds start with '{', html
@@ -411,31 +405,32 @@ def _candidate_run_keys(df: DataFrame) -> DataFrame:
     class so the JVM predicate agrees with classify_payload row-for-row
     — F.ltrim strips only spaces and a fixed substring window can't eat
     unbounded leading whitespace, both of which would silently break an
-    office run (round-3 verdict finding #1).  Runs come from the
-    gaps-and-islands trick (turn_idx - row_number is constant within an
-    adjacent run); `extract_turn` derives its route from the same
-    classifier, so the key set is exact up to payloads that later degrade
-    to route='error' — a superset for which the grouped finalize is a
-    no-op (the same per-turn guard the merge itself applies)."""
+    office run (round-3 verdict finding #1).  `extract_turn` derives its
+    route from the same classifier, so the key set is exact up to
+    payloads that later degrade to route='error' — a superset for which
+    the grouped finalize is a no-op (the same per-turn guard the merge
+    itself applies)."""
     from pyspark.sql import Window as W
 
     w = W.partitionBy("conv_id").orderBy("turn_idx")
-    office = (df.filter(F.col("text").rlike(OFFICE_SNIFF_RE))
-              .select("conv_id", "turn_idx")
-              .withColumn("_run", F.col("turn_idx")
-                          - F.row_number().over(w)))
-    wr = W.partitionBy("conv_id", "_run")
-    return (office.withColumn("_n", F.count("*").over(wr))
-            .filter(F.col("_n") >= 2)
-            .select("conv_id", "turn_idx", "_run"))
+    ti = F.col("turn_idx")
+    adjacent = ((F.lag(ti).over(w) == ti - 1)
+                | (F.lead(ti).over(w) == ti + 1))
+    return (df.filter(F.col("text").rlike(OFFICE_SNIFF_RE))
+            .select("conv_id", "turn_idx")
+            .withColumn("_adjacent", adjacent)
+            .filter("_adjacent")
+            .drop("_adjacent"))
 
 
 def _extract_finalize_conv(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One office RUN (adjacent office turns of one conversation), raw
-    rows in: extract every turn AND apply the cross-turn finalize in the
-    same Python stage.  Fusing the two steps avoids a second Arrow
-    round-trip of the fat extraction output (the grouped-finalize-over-
-    extracted variant paid ~1.3 ms/row just in re-conversion)."""
+    """The office-run rows of one conversation, raw rows in: extract every
+    turn AND apply the cross-turn finalize in the same Python stage.  Two
+    runs of one conversation are always split by a non-office index, so
+    finalize_conv's adjacency guard keeps them apart exactly as it does
+    over the whole conversation.  Fusing the two steps avoids a second
+    Arrow round-trip of the fat extraction output (the grouped-finalize-
+    over-extracted variant paid ~1.3 ms/row just in re-conversion)."""
     from .kernels.oracle import finalize_conv
 
     pdf = pdf.sort_values("turn_idx").reset_index(drop=True)
@@ -448,55 +443,43 @@ def _extract_finalize_conv(pdf: pd.DataFrame) -> pd.DataFrame:
     return _turns_to_frame(pdf, outs)
 
 
-def extract_finalized(df: DataFrame,
-                      salt_partitions: int | None = None) -> DataFrame:
+def extract_finalized(df: DataFrame) -> DataFrame:
     """The shipped extraction shape: ONE kernel pass per row, finalize
     included.  Office-run keys (cross-turn table-merge eligible turns)
     are detected from the raw input (_candidate_run_keys, a JVM-only
-    sniff + keys-only windows), the input splits on that broadcast key
-    set, and each side runs the extraction kernel exactly once:
+    sniff + one keys-only window), both sides join that one broadcast
+    key set, and each side runs the extraction kernel exactly once:
 
-      rest (~92-95%, everything outside office runs): salted
-          shuffle-free mapInPandas — identical to extract();
-      office runs: raw rows group by (conv_id, run) and extract+finalize
-          run in ONE fused Python stage (_extract_finalize_conv).
+      rest (left_anti, ~92-95%): shuffle-free mapInPandas — extract();
+      office runs (left_semi): raw rows group by conv_id and
+          extract+finalize run in ONE fused Python stage
+          (_extract_finalize_conv).
 
-    This replaced the round-2/3 persist-and-branch over the extraction
-    OUTPUT (legacy `finalize_convs`, deleted in r5 per the round-4
-    verdict — duplicate cross-turn semantics were a drift risk): output
-    rows are ~5× the input payload, so caching + three cache scans of
-    them cost more than two extra input scans, and the fused candidate
-    stage skips the second Arrow round-trip entirely.  At 10^12 turns the win is bigger — no executor storage
-    holds the extraction output (bar the tiny persisted key set), and the
-    only shuffle moves the office-run rows themselves."""
-    # tiny key frame (3 narrow columns, office-run rows only): persist so
-    # the sniff+window scan runs once, not once per broadcast build.
-    # Tracked (cache.track): re-invocation unpersists the previous run's
-    # keys, and action owners call cache.release() when done — a
-    # long-lived session (bench reps, streaming micro-batches) never
-    # accumulates stale key frames (r4 directive #6).
-    keys = cache.track("extract_keys", _candidate_run_keys(df).persist())
-    # run rows are office rows by construction, so the sniff predicate
-    # pre-filters the probe side before the join hash (same JVM-side
-    # expression the key detection used)
-    src_cand = df.filter(F.col("text").rlike(OFFICE_SNIFF_RE)) \
-        .select("conv_id", "turn_idx", "ts", "text", "tool") \
-        .join(F.broadcast(keys), ["conv_id", "turn_idx"])
-    src_rest = df.join(
-        F.broadcast(keys.select("conv_id", "turn_idx")),
-        ["conv_id", "turn_idx"], "left_anti")
-    rest = extract(src_rest, salt_partitions=salt_partitions)
-    # EXPLICIT repartition on the group keys: the run rows are small in
+    The two joins share one build plan, so the exchange is reused and the
+    sniff runs once without persisting anything.  This replaced the
+    round-2/3 persist-and-branch over the extraction OUTPUT (legacy
+    `finalize_convs`, deleted in r5 per the round-4 verdict — duplicate
+    cross-turn semantics were a drift risk): output rows are ~5× the
+    input payload, so caching + three cache scans of them cost more than
+    two extra input scans, and the fused candidate stage skips the second
+    Arrow round-trip entirely.  At 10^12 turns the win is bigger — no
+    executor storage holds anything, and the only shuffle moves the
+    office-run rows themselves."""
+    keys = F.broadcast(_candidate_run_keys(df))
+    rest = extract(df.join(keys, ["conv_id", "turn_idx"], "left_anti"))
+    # EXPLICIT repartition on the group key: the run rows are small in
     # BYTES but heavy in Python time (extraction kernel per row), so AQE's
     # size-based coalescing would fold the post-shuffle stage down to ~1
     # partition and serialize it (measured: constant ~19 s at any core
     # count).  A user repartition is never coalesced, and groupBy on the
-    # same keys reuses the partitioning — no second exchange.
-    n_parts = salt_partitions or df.sparkSession.sparkContext.defaultParallelism
-    cand = (src_cand.repartition(n_parts, "conv_id", "_run")
-            .groupBy("conv_id", "_run")
+    # same key reuses the partitioning — no second exchange.
+    runs = (df.select("conv_id", "turn_idx", "ts", "text", "tool")
+            .join(keys, ["conv_id", "turn_idx"], "left_semi")
+            .repartition(df.sparkSession.sparkContext.defaultParallelism,
+                         "conv_id")
+            .groupBy("conv_id")
             .applyInPandas(_extract_finalize_conv, schema=EXTRACT_SCHEMA))
-    return rest.unionByName(cand)
+    return rest.unionByName(runs)
 
 
 # ---------------------------------------------------------------------------
@@ -559,12 +542,6 @@ def commit_extracted(spark: SparkSession, result: DataFrame,
     if per_part:
         spark.createDataFrame(per_part).write.mode("append") \
             .parquet(os.path.join(out_dir, "metrics"))
-
-    # all actions done — drop the tags THIS job owns (r4 ADVICE: the
-    # no-arg form would also evict unrelated live caches, e.g. a
-    # concurrent query's jaccard_shingles, a silent perf regression;
-    # no-arg release is reserved for session teardown)
-    cache.release("extract_keys")
 
     # globals derive from the (tiny) per-partition rows — no second scan
     return {"turns": sum(r["turns"] for r in per_part),

@@ -158,28 +158,37 @@ def _drop_committed(spark: SparkSession, df: DataFrame, out_dir: str
         (F.col("route") == "office").cast("int").alias("_office"))
 
 
-def _run_state_path(out_dir: str, epoch: int | None = None) -> str:
-    base = os.path.join(out_dir, "run_state")
-    return base if epoch is None else os.path.join(base, f"epoch={epoch}")
+def _query_state_dir(out_dir: str, checkpoint_dir: str) -> str:
+    """One query's held-tail state dir, ``out_dir/run_state/<key>``.  The
+    key is a short hash of the query's checkpoint dir: epoch ids restart
+    at 0 per query, so two queries over one sink must not share
+    ``epoch=N`` dirs — one would overwrite, then prune, the other's held
+    rows."""
+    import hashlib
+
+    key = hashlib.sha256(
+        os.path.abspath(checkpoint_dir).encode()).hexdigest()[:12]
+    return os.path.join(out_dir, "run_state", key)
 
 
-def _read_run_state(spark: SparkSession, out_dir: str,
-                    before_epoch: int | None = None) -> DataFrame | None:
-    """Open-tail rows of the latest epoch (< before_epoch when given —
-    a REPLAYED epoch must read the state that preceded it, never its own
-    partial write), or None."""
-    base = _run_state_path(out_dir)
+def _state_epochs(state_dir: str) -> list[int]:
     try:
-        epochs = [int(d.split("=", 1)[1]) for d in os.listdir(base)
-                  if d.startswith("epoch=")]
+        return [int(d.split("=", 1)[1]) for d in os.listdir(state_dir)
+                if d.startswith("epoch=")]
     except FileNotFoundError:
-        return None
-    if before_epoch is not None:
-        epochs = [e for e in epochs if e < before_epoch]
+        return []
+
+
+def _read_run_state(spark: SparkSession, state_dir: str,
+                    before_epoch: int) -> DataFrame | None:
+    """Open-tail rows of the latest epoch < before_epoch — a REPLAYED
+    epoch must read the state that preceded it, never its own partial
+    write — or None."""
+    epochs = [e for e in _state_epochs(state_dir) if e < before_epoch]
     if not epochs:
         return None
     return spark.read.schema(TRANSCRIPT_SCHEMA) \
-        .parquet(_run_state_path(out_dir, max(epochs)))
+        .parquet(os.path.join(state_dir, f"epoch={max(epochs)}"))
 
 
 def streaming_extract(spark: SparkSession, in_dir: str, out_dir: str,
@@ -193,8 +202,10 @@ def streaming_extract(spark: SparkSession, in_dir: str, out_dir: str,
 
     CROSS-BATCH continuations: each micro-batch holds back every
     conversation's open tail office run (the rows a later batch could
-    still merge into) in a raw side-state (`out_dir/run_state/epoch=N`)
-    instead of committing them; the next batch unions the held rows with
+    still merge into) in a raw side-state
+    (`out_dir/run_state/<query key>/epoch=N`, one dir per checkpoint, so
+    queries sharing a sink never touch each other's state) instead of
+    committing them; the next batch unions the held rows with
     its own before the fused ``extract_finalized`` pass, so a
     continuation table whose anchor arrived in an EARLIER trigger merges
     exactly like the batch path.  The sink stays append-only — no row is
@@ -215,9 +226,11 @@ def streaming_extract(spark: SparkSession, in_dir: str, out_dir: str,
            .withWatermark("ts", watermark)
            .dropDuplicates(["conv_id", "turn_idx"]))
 
+    state_dir = _query_state_dir(out_dir, checkpoint_dir)
+
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         todo = batch_df
-        state = _read_run_state(spark, out_dir, before_epoch=int(epoch_id))
+        state = _read_run_state(spark, state_dir, before_epoch=int(epoch_id))
         if state is not None:
             todo = todo.unionByName(state) \
                 .dropDuplicates(["conv_id", "turn_idx"])
@@ -225,14 +238,13 @@ def streaming_extract(spark: SparkSession, in_dir: str, out_dir: str,
         closed, tails = _split_open_runs(todo, received)
         commit_extracted(spark, extract_finalized(closed), out_dir)
         tails.write.mode("overwrite") \
-            .parquet(_run_state_path(out_dir, int(epoch_id)))
+            .parquet(os.path.join(state_dir, f"epoch={int(epoch_id)}"))
         # prune state epochs older than the replay window (previous epoch)
         import shutil
-        base = _run_state_path(out_dir)
-        for d in os.listdir(base):
-            if d.startswith("epoch=") \
-                    and int(d.split("=", 1)[1]) < int(epoch_id) - 1:
-                shutil.rmtree(os.path.join(base, d), ignore_errors=True)
+        for e in _state_epochs(state_dir):
+            if e < int(epoch_id) - 1:
+                shutil.rmtree(os.path.join(state_dir, f"epoch={e}"),
+                              ignore_errors=True)
 
     return (src.writeStream
             .foreachBatch(process_batch)
@@ -243,15 +255,25 @@ def streaming_extract(spark: SparkSession, in_dir: str, out_dir: str,
 
 def flush_open_runs(spark: SparkSession, out_dir: str) -> int:
     """Commit all still-open tail runs (stream drained / conversation
-    closure): extract+finalize the held raw rows, commit them as one run,
-    clear the state.  Returns the number of rows flushed."""
-    state = _read_run_state(spark, out_dir)
-    if state is None:
+    closure): extract+finalize the held raw rows of every query's latest
+    epoch, commit them as one run, clear the state.  Returns the number
+    of rows flushed."""
+    import shutil
+
+    base = os.path.join(out_dir, "run_state")
+    latest = []
+    for q in (os.listdir(base) if os.path.isdir(base) else []):
+        epochs = _state_epochs(os.path.join(base, q))
+        if epochs:
+            latest.append(os.path.join(base, q, f"epoch={max(epochs)}"))
+    if not latest:
         return 0
+    # queries over overlapping inputs may hold the same turn
+    state = spark.read.schema(TRANSCRIPT_SCHEMA).parquet(*latest) \
+        .dropDuplicates(["conv_id", "turn_idx"])
     todo, _ = _drop_committed(spark, state, out_dir)
     n = commit_extracted(spark, extract_finalized(todo), out_dir)["turns"]
-    import shutil
-    shutil.rmtree(_run_state_path(out_dir), ignore_errors=True)
+    shutil.rmtree(base, ignore_errors=True)
     return n
 
 

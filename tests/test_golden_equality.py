@@ -46,8 +46,7 @@ def spark_frame(spark):
     from mineru_spark.pipeline import extract_finalized, synthesize_transcripts
 
     # the SHIPPED path: fused single-pass extract + cross-turn finalize
-    df = extract_finalized(synthesize_transcripts(spark, N_CONVS),
-                           salt_partitions=8)
+    df = extract_finalized(synthesize_transcripts(spark, N_CONVS))
     got = (df.toPandas()
            .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True))
     got["n_spans"] = got["spans"].map(len)
@@ -83,6 +82,52 @@ def test_route_and_metrics_equality(oracle_frame, spark_frame):
                 "boilerplate_dropped", "tables_parsed", "chars_deduped",
                 "ocr_fallback", "para_merged", "tables_merged", "n_spans"]:
         assert list(oracle_frame[col]) == list(spark_frame[col]), col
+
+
+def test_two_office_runs_in_one_conversation(spark):
+    """The fused stage groups all office-run rows of a conversation
+    together; two runs split by a non-office turn must still finalize
+    exactly as over the whole conversation — every output field equal to
+    extract_turn + finalize_conv on the complete turn list."""
+    from datetime import datetime
+
+    from mineru_spark.kernels.oracle import finalize_conv
+    from mineru_spark.pipeline import (_METRIC_COLS, TRANSCRIPT_SCHEMA,
+                                       extract_finalized)
+
+    hdr = "<tr><th>k</th><th>v</th></tr>"
+    row = "<tr><td>r{0}</td><td>x{0}</td></tr>"
+    anchors = {0, 3, 7}
+    plain = {2: "a plain reply between runs", 6: "another plain reply"}
+    texts = [plain.get(i) or ("\n " if i == 4 else "")
+             + f"<table>{hdr if i in anchors else ''}{row.format(i)}</table>"
+             for i in range(8)]
+    rows = [("zz-two-runs", i, "tool", t, "file_reader",
+             datetime(2025, 1, 1, 0, 0, i)) for i, t in enumerate(texts)]
+
+    want = []
+    for i, t in enumerate(texts):
+        out = extract_turn(t, "file_reader")
+        out["turn_idx"] = i
+        want.append(out)
+    finalize_conv(want)
+    assert [w["metrics"]["tables_merged"] for w in want] \
+        == [1, 0, 0, 2, 0, 0, 0, 0]
+
+    got = sorted(extract_finalized(spark.createDataFrame(
+        rows, schema=TRANSCRIPT_SCHEMA)).collect(),
+        key=lambda r: r["turn_idx"])
+    assert [r["turn_idx"] for r in got] == list(range(8))
+    for g, w in zip(got, want):
+        for col in ("route", "md", "md_nlp", "content_list",
+                    "content_list_v2", "middle"):
+            assert g[col] == w[col], (g["turn_idx"], col)
+        for col in _METRIC_COLS:
+            assert g[col] == w["metrics"][col], (g["turn_idx"], col)
+        assert [(s["page_idx"], list(s["bbox"]), s["type"], s["content"])
+                for s in g["spans"]] \
+            == [(s["page_idx"], [float(v) for v in s["bbox"]], s["type"],
+                 s["content"]) for s in w["spans"]], g["turn_idx"]
 
 
 def test_run_job_resume_idempotent(spark, tmp_path):

@@ -87,29 +87,95 @@ def test_near_dup_pair_joins_are_not_cartesian(spark, qname):
     assert "BroadcastNestedLoop" not in plan
 
 
-def test_extract_finalized_is_single_fused_pass(spark):
+def _office_run_turns(conv_id, n, start=0, ws=""):
+    """Raw transcript rows of an office run of ``n`` tables at turn
+    indices start..start+n-1: an anchor with a header row, then headerless
+    continuations of the same width (the cross-turn merge shape)."""
+    from datetime import datetime
+
+    hdr = "<tr><th>k</th><th>v</th></tr>"
+    row = "<tr><td>r{0}</td><td>x{0}</td></tr>"
+    return [(conv_id, i, "tool",
+             ws + f"<table>{hdr if i == start else ''}{row.format(i)}</table>",
+             "file_reader", datetime(2025, 1, 1, 0, 0, i))
+            for i in range(start, start + n)]
+
+
+def test_extract_finalized_is_single_fused_pass(spark, tmp_path):
     """The shipped shape (queries()['x_transcripts_extract'], bench.py,
     run_job): exactly ONE extraction map for the rest branch plus ONE
-    fused extract+finalize group stage for candidate conversations — the
-    kernel appears twice only because the inputs are disjoint; no branch
-    re-reads another's output and nothing is cached."""
-    from mineru_spark.pipeline import extract_finalized, synthesize_transcripts
+    fused extract+finalize group stage keyed by conv_id — the kernel
+    appears twice only because the inputs are disjoint; no branch
+    re-reads another's output.  After an action, the final adaptive plan
+    builds the office-run key set into ONE broadcast that the other side
+    of the split reuses, and nothing is cached."""
+    import re
 
-    plan = _plan(extract_finalized(synthesize_transcripts(spark, 6)))
-    assert plan.count("MapInPandas _extract_batch") == 1
-    assert plan.count("FlatMapGroupsInPandas") == 1
-    # the only cached relation is the tiny office-run KEY set — never a
-    # payload or extraction-output column
-    for ln in plan.splitlines():
-        if "InMemoryTableScan" in ln:
-            assert "text#" not in ln and "md#" not in ln
+    from mineru_spark.pipeline import (TRANSCRIPT_SCHEMA, extract_finalized,
+                                       synthesize_transcripts)
+
+    spark.catalog.clearCache()
+    # one parquet source (as in production), holding an office run so the
+    # key set is non-empty and AQE cannot prune either join away
+    src = str(tmp_path / "src")
+    synthesize_transcripts(spark, 6).unionByName(spark.createDataFrame(
+        _office_run_turns("zz-run", 3), schema=TRANSCRIPT_SCHEMA)) \
+        .write.parquet(src)
+    df = extract_finalized(spark.read.parquet(src))
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in plan
+    assert final.count("MapInPandas _extract_batch") == 1
+    assert final.count("FlatMapGroupsInPandas [conv_id") == 1
+    assert len(re.findall(r"[+:]- BroadcastExchange ", final)) == 1
+    reused = re.findall(r"[+:]- ReusedExchange \[(.*?)\], BroadcastExchange",
+                        final)
+    assert len(reused) == 1
+    assert [c.split("#")[0] for c in reused[0].split(", ")] \
+        == ["conv_id", "turn_idx"]
+    assert "InMemoryTableScan" not in final
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
     # candidate rows shuffle RAW columns into the fused group stage —
     # never the fat extraction output (the node line itself lists the
     # OUTPUT schema, so skip it and inspect the child subtree)
-    seg = plan.split("FlatMapGroupsInPandas")[1]
-    child = "\n".join(seg.split("MapInPandas")[0].splitlines()[1:])
+    seg = final.split("FlatMapGroupsInPandas")[1]
+    child = "\n".join(seg.splitlines()[1:])
     assert "text#" in child and "md#" not in child
-    spark.catalog.clearCache()
+
+
+def test_candidate_run_keys_hand_built(spark):
+    """The office-run key set is exactly the office turns with an
+    index-adjacent office neighbour: a lone office turn is no run, runs of
+    2 and 3 are, two runs of one conversation split by a non-office turn
+    are both found, and leading whitespace before <table> still sniffs as
+    office."""
+    from datetime import datetime
+
+    from mineru_spark.pipeline import TRANSCRIPT_SCHEMA, _candidate_run_keys
+
+    def plain(conv_id, i):
+        return (conv_id, i, "user", "plain text", None,
+                datetime(2025, 1, 1, 0, 0, i))
+
+    rows = (_office_run_turns("a-single", 1, start=1)
+            + [plain("a-single", 0), plain("a-single", 2)]
+            + _office_run_turns("b-pair", 2)
+            + _office_run_turns("c-triple", 3, start=2, ws="\n\t ")
+            + [plain("c-triple", 0), plain("c-triple", 1)]
+            + _office_run_turns("d-two-runs", 2)
+            + [plain("d-two-runs", 2)]
+            + _office_run_turns("d-two-runs", 3, start=3, ws=" " * 300)
+            + [plain("d-two-runs", 6)]
+            + _office_run_turns("d-two-runs", 1, start=7))
+    keys = _candidate_run_keys(
+        spark.createDataFrame(rows, schema=TRANSCRIPT_SCHEMA))
+    assert keys.columns == ["conv_id", "turn_idx"]
+    got = sorted((r["conv_id"], r["turn_idx"]) for r in keys.collect())
+    assert got == [("b-pair", 0), ("b-pair", 1),
+                   ("c-triple", 2), ("c-triple", 3), ("c-triple", 4),
+                   ("d-two-runs", 0), ("d-two-runs", 1),
+                   ("d-two-runs", 3), ("d-two-runs", 4), ("d-two-runs", 5)]
 
 
 def test_office_sniff_matches_python_classifier(spark):
@@ -167,10 +233,10 @@ def test_simhash_hot_bucket_escalation_exact(spark, monkeypatch):
 
 
 def test_run_job_leaves_no_cached_relations(spark, tmp_path):
-    """Unpersist discipline (r4 directive #6): run_job releases every
-    tracked persisted frame (the run-key set) after its actions, so a
-    long-lived session (bench reps, streaming epochs) never accumulates
-    cached relations."""
+    """A run_job persists nothing: the office-run key set is a lazy
+    broadcast, not a cached frame, so a long-lived session (bench reps,
+    streaming epochs) never accumulates cached relations and no caller
+    has a release to make."""
     from mineru_spark.pipeline import run_job, synthesize_transcripts
 
     spark.catalog.clearCache()

@@ -289,6 +289,57 @@ def test_batch_and_streaming_share_one_sink(spark, tmp_path):
     assert not run_ids["q1"] & run_ids["q2"]
 
 
+def test_two_queries_keep_their_held_tails_apart(spark, tmp_path):
+    """Two streaming queries over one sink, over disjoint conversations,
+    each holding open tail runs across its micro-batches, with NO flush
+    in between: both queries' epoch ids start at 0, so their held-tail
+    state must not share epoch dirs — a clash let the second query
+    overwrite and prune the first one's held rows, which then never
+    reached the sink.  One flush afterwards must commit every input turn
+    exactly once."""
+    from datetime import datetime
+
+    from mineru_spark.pipeline import TRANSCRIPT_SCHEMA
+    from mineru_spark.streaming.ingest import (flush_open_runs,
+                                               streaming_extract)
+
+    hdr = "<tr><th>k</th><th>v</th></tr>"
+    row = "<tr><td>r{0}</td><td>x{0}</td></tr>"
+
+    def conv(conv_id, n_turns):
+        # plain turns, then an office run that is still open at the end
+        # of the input (its right flank never arrives), so it is held
+        return [(conv_id, i, "tool",
+                 f"<table>{hdr if i == 2 else ''}{row.format(i)}</table>"
+                 if i >= 2 else f"plain turn {i}", "file_reader",
+                 datetime(2025, 1, 1, 0, 0, i)) for i in range(n_turns)]
+
+    out = str(tmp_path / "sink")
+    n = 0
+    for name in ("q1", "q2"):
+        src = spark.createDataFrame(
+            conv(f"{name}-a", 5) + conv(f"{name}-b", 6),
+            schema=TRANSCRIPT_SCHEMA)
+        n += src.count()
+        in_dir = str(tmp_path / f"in_{name}")
+        # two files, so each conversation straddles two micro-batches
+        src.filter(F.col("turn_idx") <= 2).coalesce(1).write.parquet(in_dir)
+        src.filter(F.col("turn_idx") >= 3).coalesce(1) \
+            .write.mode("append").parquet(in_dir)
+        q = streaming_extract(spark, in_dir, out, str(tmp_path / f"ck_{name}"),
+                              max_files_per_trigger=1)
+        _await(q)
+
+    assert flush_open_runs(spark, out) > 0
+    got = spark.read.parquet(os.path.join(out, "extracted"))
+    assert got.count() == n
+    assert got.select("conv_id", "turn_idx").distinct().count() == n
+    # the held tails merged as one run each, across the trigger boundary
+    merged = {r["conv_id"]: r["tables_merged"] for r in
+              got.filter(F.col("turn_idx") == 2).collect()}
+    assert merged == {"q1-a": 2, "q1-b": 3, "q2-a": 2, "q2-b": 3}
+
+
 def test_streaming_dedup_same_batch_duplicate_burst(spark, tmp_path):
     """r6 state re-key (state keyed BY content hash, one constant-size
     row per distinct hash): a burst of many copies of one text inside a

@@ -33,7 +33,6 @@ cores = int(sys.argv[1]); corpus = sys.argv[2]
 spark = get_spark(app=f"scaling_{cores}", master=f"local[{cores}]",
                   shuffle_partitions=cores)
 spark.sparkContext.setLogLevel("ERROR")
-spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "32")
 if not os.path.exists(os.path.join(corpus, "_SUCCESS")):
     synthesize_transcripts(spark, int(sys.argv[3]), partitions=64).write \
         .mode("overwrite").parquet(corpus)
