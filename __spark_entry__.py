@@ -32,7 +32,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # (mineru_spark/golden.py): the single-process oracle kernel — the same
 # contract the pytest golden-equality suite anchors byte-for-byte — written
 # to parquet at sf0.01; oracle_sql() reads it via read_parquet.  The driver
-# gate thus verifies that the DISTRIBUTED path (Arrow batching, salting,
+# gate thus verifies that the DISTRIBUTED path (Arrow batching,
 # conv-grouped finalize, ordering) reproduces the single-process result for
 # every route.
 # ---------------------------------------------------------------------------

@@ -10,9 +10,9 @@ Usage:
 The job is idempotent: rerunning with the same output resumes via the
 sink's (conv_id, turn_idx) lineage anti-join. It writes the one sink that
 batch and streaming runs share: <output>/extracted, partitioned by day
-(ds=yyyy-MM-dd) with a run_id on every row, and a metrics table of
-per-partition rows keyed by run_id in <output>/metrics. A one-line JSON
-summary goes to stdout.
+(ds=yyyy-MM-dd) with a run_id on every row, and a metrics table in
+<output>/metrics holding one row per run: its run_id, turn count and
+counter sums. A one-line JSON summary goes to stdout.
 """
 
 from __future__ import annotations

@@ -35,7 +35,8 @@ import os
 import numpy as np
 import pandas as pd
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import (DataFrame, Observation, SparkSession,
+                         functions as F, types as T)
 
 from .datagen.transcripts import conv_length, gen_turn
 from .kernels.classify import OFFICE_SNIFF_RE, classify_series
@@ -57,8 +58,8 @@ SPAN_TYPE = T.ArrayType(T.StructType([
     T.StructField("content", T.StringType(), True),
 ]))
 
-# metrics are flat int columns (not a struct) so downstream per-partition
-# aggregation stays whole-stage-codegen'd
+# metrics are flat int columns (not a struct), so the commit observes one
+# sum per column
 EXTRACT_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType(), False),
     T.StructField("turn_idx", T.IntegerType(), False),
@@ -81,16 +82,22 @@ EXTRACT_SCHEMA = T.StructType([
     T.StructField("spans_need_ocr", T.IntegerType(), True),
 ])
 
-# the sink's rows: EXTRACT_SCHEMA plus the columns commit_extracted adds
-SINK_SCHEMA = T.StructType(EXTRACT_SCHEMA.fields + [
-    T.StructField("part_id", T.IntegerType(), False),
-    T.StructField("run_id", T.StringType(), False),
-    T.StructField("ds", T.StringType(), True),
-])
+# the sink's rows as a read returns them: EXTRACT_SCHEMA plus the columns
+# commit_extracted adds, every column nullable (file scans drop NOT NULL)
+SINK_SCHEMA = T.StructType(
+    [T.StructField(f.name, f.dataType, True) for f in EXTRACT_SCHEMA.fields]
+    + [T.StructField("run_id", T.StringType(), True),
+       T.StructField("ds", T.StringType(), True)])
 
 _METRIC_COLS = ["blocks_classified", "blocks_discarded", "boilerplate_dropped",
                 "tables_parsed", "chars_deduped", "ocr_fallback",
                 "para_merged", "tables_merged", "spans_need_ocr"]
+
+# the metrics table: one row per committed run, its turns and counter sums
+METRICS_SCHEMA = T.StructType(
+    [T.StructField("run_id", T.StringType(), False)]
+    + [T.StructField(c, T.LongType(), True)
+       for c in ["turns"] + _METRIC_COLS])
 
 
 def get_spark(app: str = "mineru_spark", master: str | None = None,
@@ -486,13 +493,14 @@ def extract_finalized(df: DataFrame) -> DataFrame:
 # Sink + resume + metrics (SURVEY §7 step 7)
 # ---------------------------------------------------------------------------
 
-def _read_sink(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """Every committed row of ``out_dir``'s sink, or None before its first
-    commit.  The explicit schema skips schema inference and keeps ``ds`` a
-    string; a sink directory holding no data file reads as empty."""
+def _read_sink(spark: SparkSession, out_dir: str, table: str = "extracted",
+               schema: T.StructType = SINK_SCHEMA) -> DataFrame | None:
+    """Every committed row of one of ``out_dir``'s sink tables, or None
+    before its first commit.  The explicit schema skips schema inference
+    and keeps ``ds`` a string; a table directory holding no data file
+    reads as empty."""
     try:
-        return spark.read.schema(SINK_SCHEMA) \
-            .parquet(os.path.join(out_dir, "extracted"))
+        return spark.read.schema(schema).parquet(os.path.join(out_dir, table))
     except AnalysisException:
         return None
 
@@ -513,41 +521,34 @@ def commit_extracted(spark: SparkSession, result: DataFrame,
                            predicates prune partitions at read; every row
                            carries its run's run_id (the Iceberg
                            snapshot-id analog)
-      out_dir/metrics/     appended per run: one row per task partition,
-                           keyed by run_id
+      out_dir/metrics/     appended per non-empty run: one METRICS_SCHEMA
+                           row, its turn count and counter sums
 
     run_id is a fresh uuid, not a streaming epoch id: epoch ids restart at
     0 under a new checkpoint, so two queries sharing one sink would share
-    run_ids.  Cost: the write (the one extraction pass) plus a
-    run_id-filtered read-back for the metrics — parquet row-group stats
-    (run_id is constant per file) skip every earlier run's files, so the
-    metric scan touches only this run's output."""
+    run_ids.  Cost: the one write.  The metrics are an ``Observation`` on
+    the written frame, aggregated by the write's own tasks (the
+    reference's per-document on_doc_ready counters,
+    cli/common.py:402-422) — the run's output is never read back.  An
+    unnamed Observation gets a unique name, so streaming queries that
+    commit concurrently in one session never share one."""
     import uuid
 
-    run_id = uuid.uuid4().hex
-    (result.withColumn("part_id", F.spark_partition_id())
+    run_id, obs = uuid.uuid4().hex, Observation()
+    (result.observe(obs, F.count(F.lit(1)).alias("turns"),
+                    *(F.sum(c).alias(c) for c in _METRIC_COLS))
      .withColumn("run_id", F.lit(run_id))
      .withColumn("ds", F.date_format(F.col("ts").cast("timestamp"),
                                      "yyyy-MM-dd"))
      .write.mode("append").partitionBy("ds")
      .parquet(os.path.join(out_dir, "extracted")))
-
-    out = _read_sink(spark, out_dir).filter(F.col("run_id") == run_id)
-    per_part = (out.groupBy("part_id")
-                .agg(F.count("*").alias("turns"),
-                     F.sum("blocks_classified").alias("blocks_classified"),
-                     F.sum("boilerplate_dropped").alias("boilerplate_dropped"),
-                     F.sum("ocr_fallback").alias("ocr_fallback"))
-                .withColumn("run_id", F.lit(run_id))).collect()
-    if per_part:
-        spark.createDataFrame(per_part).write.mode("append") \
-            .parquet(os.path.join(out_dir, "metrics"))
-
-    # globals derive from the (tiny) per-partition rows — no second scan
-    return {"turns": sum(r["turns"] for r in per_part),
-            "blocks": sum(r["blocks_classified"] for r in per_part),
-            "ocr_fallback": sum(r["ocr_fallback"] for r in per_part),
-            "run_id": run_id}
+    # an empty run observes turns = 0 and null sums
+    m = {k: v or 0 for k, v in obs.get.items()}
+    if m["turns"]:
+        spark.createDataFrame([{"run_id": run_id, **m}], METRICS_SCHEMA) \
+            .write.mode("append").parquet(os.path.join(out_dir, "metrics"))
+    return {"turns": m["turns"], "blocks": m["blocks_classified"],
+            "ocr_fallback": m["ocr_fallback"], "run_id": run_id}
 
 
 def run_job(spark: SparkSession, transcripts: DataFrame, out_dir: str,
@@ -569,22 +570,26 @@ def run_job(spark: SparkSession, transcripts: DataFrame, out_dir: str,
 
 def list_runs(spark: SparkSession, out_dir: str) -> list[dict]:
     """Snapshot inventory (the Iceberg snapshot-list analog): one row per
-    run_id from the per-run metrics table, with its turn totals."""
-    metrics = spark.read.parquet(os.path.join(out_dir, "metrics"))
-    rows = (metrics.groupBy("run_id")
-            .agg(F.sum("turns").alias("turns"),
-                 F.sum("blocks_classified").alias("blocks"),
-                 F.count("*").alias("n_partitions"))
-            .collect())
-    return [r.asDict() for r in rows]
+    run_id from the metrics table, with its turn totals; [] before the
+    first commit.  The sum keeps one row per run over metrics written as
+    several rows per run by earlier versions."""
+    metrics = _read_sink(spark, out_dir, "metrics", METRICS_SCHEMA)
+    if metrics is None:
+        return []
+    return [r.asDict() for r in metrics.groupBy("run_id").agg(
+        F.sum("turns").alias("turns"),
+        F.sum("blocks_classified").alias("blocks")).collect()]
 
 
 def read_run(spark: SparkSession, out_dir: str, run_id: str) -> DataFrame:
     """Read ONE run's output (the Iceberg snapshot-read / time-travel
-    analog): run_id is constant per written file, so parquet row-group
-    stats prune every other run's files from the scan."""
-    return (spark.read.parquet(os.path.join(out_dir, "extracted"))
-            .filter(F.col("run_id") == run_id))
+    analog) in SINK_SCHEMA: run_id is constant per written file, so
+    parquet row-group stats prune every other run's files from the
+    scan."""
+    sink = _read_sink(spark, out_dir)
+    if sink is None:
+        return spark.createDataFrame([], SINK_SCHEMA)
+    return sink.filter(F.col("run_id") == run_id)
 
 
 def write_bucketed_sink(spark: SparkSession, extracted: DataFrame,

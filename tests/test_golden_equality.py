@@ -133,7 +133,8 @@ def test_two_office_runs_in_one_conversation(spark):
 def test_run_job_resume_idempotent(spark, tmp_path):
     """Second run over the same input must skip every turn (lineage
     anti-join) and leave the sink row count unchanged."""
-    from mineru_spark.pipeline import synthesize_transcripts, run_job
+    from mineru_spark.pipeline import (list_runs, run_job,
+                                       synthesize_transcripts)
 
     out = str(tmp_path / "sink")
     df = synthesize_transcripts(spark, 10)
@@ -144,9 +145,11 @@ def test_run_job_resume_idempotent(spark, tmp_path):
     r2 = run_job(spark, df, out, resume=True)
     assert r2["turns"] == 0 and r2["skipped_resume"] == n
     assert spark.read.parquet(os.path.join(out, "extracted")).count() == n
-    # per-partition metrics table exists and covers all turns
+    # one metrics row per non-empty run: the no-op rerun adds none
     m = spark.read.parquet(os.path.join(out, "metrics")).toPandas()
-    assert m["turns"].sum() == n
+    assert m["run_id"].tolist() == [r1["run_id"]] and m["turns"].sum() == n
+    assert [(r["run_id"], r["turns"]) for r in list_runs(spark, out)] \
+        == [(r1["run_id"], n)]
 
 
 def test_sink_partitioned_by_day(spark, tmp_path):
@@ -202,11 +205,15 @@ def test_skew_partition_balance(spark):
 
 def test_run_snapshots_list_and_read(spark, tmp_path):
     """run_id is the snapshot handle: list_runs inventories every append,
-    read_run time-travels to exactly one run's rows."""
-    from mineru_spark.pipeline import (synthesize_transcripts, run_job,
-                                       list_runs, read_run)
+    read_run time-travels to exactly one run's rows, in SINK_SCHEMA (a
+    ds partition value stays a string).  Before the first commit there
+    is no run to list or read."""
+    from mineru_spark.pipeline import (SINK_SCHEMA, synthesize_transcripts,
+                                       run_job, list_runs, read_run)
 
     out = str(tmp_path / "snap")
+    assert list_runs(spark, out) == []
+    assert read_run(spark, out, "none").count() == 0
     a = synthesize_transcripts(spark, 10)
     b = synthesize_transcripts(spark, 16).join(
         a.select("conv_id").distinct(), "conv_id", "left_anti")
@@ -217,3 +224,4 @@ def test_run_snapshots_list_and_read(spark, tmp_path):
     assert runs[r2["run_id"]]["turns"] == r2["turns"]
     assert read_run(spark, out, r1["run_id"]).count() == r1["turns"]
     assert read_run(spark, out, r2["run_id"]).count() == r2["turns"]
+    assert read_run(spark, out, r1["run_id"]).schema == SINK_SCHEMA

@@ -239,9 +239,11 @@ def test_batch_and_streaming_share_one_sink(spark, tmp_path):
     the other half, then a batch run over everything must find every turn
     already committed — no turn extracted twice, every data file under a
     ds= directory, every run in list_runs.  The two queries' epoch ids
-    both start at 0, so their run_ids must not derive from them."""
-    from mineru_spark.pipeline import (list_runs, run_job,
-                                       synthesize_transcripts)
+    both start at 0, so their run_ids must not derive from them.  Each
+    run's one metrics row holds exactly its sink rows' count and counter
+    sums."""
+    from mineru_spark.pipeline import (_METRIC_COLS, list_runs, read_run,
+                                       run_job, synthesize_transcripts)
     from mineru_spark.streaming.ingest import (flush_open_runs,
                                                streaming_extract)
 
@@ -287,6 +289,15 @@ def test_batch_and_streaming_share_one_sink(spark, tmp_path):
                for name, cond in streamed.items()}
     assert run_ids["q1"] and run_ids["q2"]
     assert not run_ids["q1"] & run_ids["q2"]
+
+    assert "part_id" not in got.columns
+    metrics = spark.read.parquet(os.path.join(out, "metrics")).collect()
+    assert sorted(m["run_id"] for m in metrics) == sorted(runs)
+    for m in metrics:
+        sums = read_run(spark, out, m["run_id"]).agg(
+            F.count(F.lit(1)).alias("turns"),
+            *(F.sum(c).alias(c) for c in _METRIC_COLS)).first()
+        assert m.asDict() == {"run_id": m["run_id"], **sums.asDict()}
 
 
 def test_two_queries_keep_their_held_tails_apart(spark, tmp_path):
